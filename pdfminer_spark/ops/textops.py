@@ -707,8 +707,8 @@ def _simhash_candidates_from_keyed(keyed: DataFrame) -> DataFrame:
 
 def _simhash_candidates(sims: DataFrame) -> DataFrame:
     """Distinct (id_a, id_b) candidate pairs from Manku combination keys
-    over a (doc_id, simhash) frame. Split out so tests (and the bench's
-    candidate telemetry) can inject synthetic fingerprints (exact
+    over a (doc_id, simhash) frame. Split out so tests (and the capacity
+    probes' candidate telemetry) can inject synthetic fingerprints (exact
     hamming-3 worst cases) and assert the candidate-volume bound
     directly. The keyed frame is materialized once for both self-join
     sides."""

@@ -125,73 +125,9 @@ def build_transcript_rows(n_convs: int = 20, seed: int = 42,
 
 
 def build_transcripts(spark: SparkSession, n_convs: int = 20, seed: int = 42,
-                      giant_conv_turns: int = 0,
-                      num_partitions: int | None = None) -> DataFrame:
+                      giant_conv_turns: int = 0) -> DataFrame:
     (rows, _) = build_transcript_rows(n_convs, seed, giant_conv_turns)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return df
-
-
-def build_transcripts_scaled(spark: SparkSession, n_turns: int,
-                             n_convs: int | None = None,
-                             giant_frac: float = 0.2,
-                             num_partitions: int | None = None) -> DataFrame:
-    """Scale-path transcripts builder: the skeleton is generated
-    executor-side with spark.range and payload cells attached via a
-    broadcast join against the 10-row payload table — the driver never
-    serializes the replicated corpus (contrast build_transcripts, which
-    ships every cell through createDataFrame; fine for tests, wrong for
-    benchmarks).
-
-    ``giant_frac`` of all turns land in conversation conv-0000 (the skew
-    driver); the rest spread over n_convs conversations."""
-    from pyspark.sql import functions as F
-
-    if n_convs is None:
-        n_convs = max(n_turns // 8, 1)
-    payloads = _load_payloads()
-    pay_df = spark.createDataFrame(
-        [(i, b64) for (i, (_, b64)) in enumerate(payloads)],
-        "payload_id int, payload string")
-    giant_turns = int(n_turns * giant_frac)
-    sk = spark.range(n_turns, numPartitions=num_partitions or None)
-    conv = F.when(
-        F.col("id") < giant_turns, F.lit(0)
-    ).otherwise(F.pmod(F.xxhash64("id"), F.lit(max(n_convs - 1, 1))) + 1)
-    kind = F.pmod(F.xxhash64(F.col("id") + 7), F.lit(100))
-    skeleton = sk.select(
-        F.concat(F.lit("conv-"), F.lpad(conv.cast("string"), 4, "0")).alias("conv_id"),
-        F.col("id").cast("int").alias("turn_idx"),
-        F.element_at(F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-                     (F.col("id") % 3 + 1).cast("int")).alias("role"),
-        kind.alias("_kind"),
-        F.pmod(F.xxhash64(F.col("id") + 13), F.lit(len(payloads)))
-        .cast("int").alias("payload_id"),
-        (F.lit("2026-01-01 00:00:00").cast("timestamp")
-         + F.make_interval(mins=F.col("id").cast("int") % 1440)).alias("ts"),
-    )
-    html = F.concat(
-        F.lit("<html><body><nav><a href='/'>Home</a> <a href='/a'>A</a></nav>"
-              "<article><h1>Synthetic "),
-        F.col("turn_idx").cast("string"),
-        F.lit("</h1><p>generated body text with enough words to keep the "
-              "block classifier happy and some more filler tokens here"
-              "</p></article><footer><a href='/tos'>terms</a></footer>"
-              "</body></html>"))
-    chat = F.concat(F.lit("chat message number "), F.col("turn_idx").cast("string"))
-    joined = skeleton.join(F.broadcast(pay_df), "payload_id", "left")
-    return joined.select(
-        "conv_id", "turn_idx", "role",
-        F.when(F.col("_kind") < 45, F.col("payload"))
-        .when(F.col("_kind") < 70, html)
-        .otherwise(chat).alias("text"),
-        F.when(F.col("_kind") < 45, F.lit("pdf"))
-        .when(F.col("_kind") < 70, F.lit("html"))
-        .otherwise(F.lit("")).alias("tool"),
-        "ts",
-    )
+    return spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
 
 
 EXPECTED_SCHEMA = T.StructType([

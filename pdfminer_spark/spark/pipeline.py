@@ -57,17 +57,19 @@ EXTRACTED_SCHEMA_DDL = (
 
 def extract_one(text: str, tool: str, page_numbers=None,
                 detect_vertical: bool = True, with_boxes: bool = False,
-                pdf_bytes: bytes | None = None, fmt: str = "text"):
+                pdf_bytes: bytes | None = None):
     """Extract one turn payload -> (text, n_pages, n_boxes, bytes, status
-    [, boxes]). ``boxes`` rows are (box_id, page, x0, y0, x1, y1, wmode,
-    text) in reading order — the span unit of the XML goldens.
+    [, boxes]). A PDF's text is its pdf2txt.py rendering
+    (``pdf.extract.extract_text``). ``boxes`` rows are (box_id, page, x0,
+    y0, x1, y1, wmode, text) in reading order — the span unit of the XML
+    goldens.
 
     ``pdf_bytes``: pre-decoded payload (the pipeline unbase64s JVM-side
     before the shuffle — 25% less shuffle/Arrow traffic than b64 text).
 
     Importable without pyspark (reused by tests and the DuckDB oracle)."""
     from pdfminer_spark.html.boilerplate import extract_main_text
-    from pdfminer_spark.pdf.extract import extract_pages, render_text
+    from pdfminer_spark.pdf.extract import extract_pages, extract_text
     from pdfminer_spark.pdf.layout import LAParams, TextBox, TextBoxV
 
     boxes: list[tuple] = []
@@ -76,8 +78,7 @@ def extract_one(text: str, tool: str, page_numbers=None,
             data = pdf_bytes if pdf_bytes is not None else base64.b64decode(text)
             la = LAParams(detect_vertical=detect_vertical)
             pages = extract_pages(data, page_numbers=page_numbers,
-                                  laparams=la,
-                                  collect_shapes=(fmt != "text"))
+                                  laparams=la, collect_shapes=False)
             n_boxes = 0
             for (pageno, page) in enumerate(pages):
                 for o in page.objs:
@@ -88,20 +89,7 @@ def extract_one(text: str, tool: str, page_numbers=None,
                                 o.index, pageno, o.x0, o.y0, o.x1, o.y1,
                                 "tb-rl" if isinstance(o, TextBoxV) else "lr-tb",
                                 o.get_text()))
-            if fmt == "xml":
-                from pdfminer_spark.pdf.xmlout import pages_to_xml
-
-                rendered = pages_to_xml(pages)
-            elif fmt == "html":
-                from pdfminer_spark.pdf.htmlout import pages_to_html
-
-                rendered = pages_to_html(pages)
-            else:
-                out: list[str] = []
-                for page in pages:
-                    render_text(page, out)
-                    out.append("\f")
-                rendered = "".join(out)
+            rendered = extract_text(data, pages=pages)
             # deep-nesting truncation is observable, not silent (ADVICE
             # r6): a doc whose Form XObject nesting hit the interpreter's
             # 64-deep cap still extracts, flagged 'ok:truncated-forms'
@@ -119,15 +107,14 @@ def extract_one(text: str, tool: str, page_numbers=None,
     return result + (boxes,) if with_boxes else result
 
 
-def _extract_map_batches(page_numbers, detect_vertical, with_boxes=False,
-                         fmt="text"):
+def _extract_map_batches(page_numbers, detect_vertical, with_boxes=False):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["_pdf"] if "_pdf" in pdf.columns else [None] * len(pdf)
             results = [
                 extract_one(text, tool, page_numbers, detect_vertical,
                             with_boxes,
-                            bytes(pb) if pb is not None else None, fmt)
+                            bytes(pb) if pb is not None else None)
                 for (text, tool, pb) in zip(pdf["text"], pdf["tool"], payloads)
             ]
             cols = {
@@ -169,12 +156,12 @@ def extract_transcripts(df: DataFrame, page_numbers=None,
                         num_partitions: int | None = None,
                         salt: int = 16,
                         repartition: bool = True,
-                        with_boxes: bool = False,
-                        fmt: str = "text") -> DataFrame:
+                        with_boxes: bool = False) -> DataFrame:
     """transcripts -> extracted. One mapInPandas stage, Arrow-batched.
-    ``with_boxes`` adds the layout-span array column (SURVEY.md §1.3);
-    ``fmt`` selects the rendered text column: 'text' | 'xml' | 'html'
-    (the reference's -t output modes, golden-identical).
+    ``with_boxes`` adds the layout-span array column (SURVEY.md §1.3).
+    The ``text`` column is the pdf2txt.py text rendering; the XML and
+    HTML output modes are ``pdf.xmlout.extract_xml`` and
+    ``pdf.htmlout.extract_html``.
 
     PDF payloads are unbase64'd JVM-side *before* the shuffle so the salt
     repartition and the Arrow crossing carry binary (25% smaller than
@@ -192,7 +179,7 @@ def extract_transcripts(df: DataFrame, page_numbers=None,
     src = (salted_repartition(prepared, num_partitions, salt)
            if repartition else prepared)
     return src.mapInPandas(
-        _extract_map_batches(page_numbers, detect_vertical, with_boxes, fmt),
+        _extract_map_batches(page_numbers, detect_vertical, with_boxes),
         schema=EXTRACTED_WITH_BOXES_SCHEMA if with_boxes else EXTRACTED_SCHEMA,
     )
 

@@ -13,11 +13,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# r8 (guide §4.2): the r7 64-ROW batch cap — sized for MB-scale PDF
+# payload cells — taxed every narrow-row Python stage with per-batch
+# overhead (ann_lsh_pairs' exact-cosine stage spent 3.6 s of its 5.7 s
+# crossing 104k rows in 1.6k batches; 2.4 s total with the caps below).
+# Spark 4's maxBytesPerBatch is the direct memory bound: rows-per-batch
+# can rise to 4096 while a batch of MB-size payload cells is cut at
+# 16 MB — STRICTER for the PDF extraction stage than 64 rows ever was
+# (64 x 650 KB forms ~= 40 MB).
+ARROW_BATCH_ROWS = 4096
+ARROW_BATCH_BYTES = "16m"
+
 
 def get_spark(app_name: str = "pdfminer-spark", cpus: int | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_batch: int = 4096,
-              arrow_max_bytes: str = "16m") -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     # python WORKERS resolve imports via PYTHONPATH, not the driver's
     # sys.path — a harness launching from any other cwd would otherwise
     # fail to unpickle the mapInPandas UDFs (worker: "No module named
@@ -50,17 +59,10 @@ def get_spark(app_name: str = "pdfminer-spark", cpus: int | None = None,
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "128m"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # r8 (guide §4.2): the r7 64-ROW batch cap — sized for MB-scale
-        # PDF payload cells — taxed every narrow-row Python stage with
-        # per-batch overhead (ann_lsh_pairs' exact-cosine stage spent
-        # 3.6 s of its 5.7 s crossing 104k rows in 1.6k batches; 2.4 s
-        # total with the caps below). Spark 4's maxBytesPerBatch is the
-        # direct memory bound: rows-per-batch can rise to 4096 while a
-        # batch of MB-size payload cells is cut at 16 MB — STRICTER for
-        # the PDF extraction stage than 64 rows ever was (64 x 650 KB
-        # forms ~= 40 MB).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", arrow_max_bytes)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(ARROW_BATCH_ROWS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                ARROW_BATCH_BYTES)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.python.worker.reuse", "true")

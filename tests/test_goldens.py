@@ -1,10 +1,13 @@
 """End-to-end golden regression: byte equality against the reference's own
 expected outputs (its regression oracle, samples/Makefile:39-48: page 1,
 vertical detection on)."""
+import base64
+
 import pytest
 
 from pdfminer_spark.pdf.extract import extract_text
 from pdfminer_spark.pdf.layout import LAParams
+from pdfminer_spark.spark.pipeline import extract_one
 
 from conftest import golden_text, payload
 
@@ -20,6 +23,19 @@ LA = dict(page_numbers=[0], laparams=LAParams(detect_vertical=True))
 @pytest.mark.parametrize("name", SAMPLES)
 def test_text_golden(name):
     assert extract_text(payload(name), **LA) == golden_text(name)
+
+
+@pytest.mark.parametrize("name", SAMPLES)
+def test_extract_one_all_pages(name):
+    """The in-UDF path renders every page exactly as the library does;
+    the goldens above pin page 0 only."""
+    data = payload(name)
+    (text, n_pages, _, n_bytes, status) = extract_one(
+        base64.b64encode(data).decode("ascii"), "pdf")
+    assert status == "ok"
+    assert n_bytes == len(data)
+    assert text == extract_text(data, laparams=LAParams(detect_vertical=True))
+    assert text.count("\f") == n_pages
 
 
 ENCRYPTED = ["rc4-40", "rc4-128", "aes-128", "aes-128-m", "aes-256", "aes-256-m"]

@@ -69,8 +69,8 @@ def main() -> None:
     sizes = [int(s) for s in os.environ.get(
         "SPARK_GRAFT_CAP_SIZES", "5000 50000").split()]
     spark = get_spark("capacity-rank", cpus=32, shuffle_partitions=32)
-    # warm pass (codegen compile, Arrow init) — same discipline as
-    # bench.py: one-time JVM costs must not masquerade as the 1x wall
+    # warm pass (codegen compile, Arrow init): one-time JVM costs must
+    # not masquerade as the 1x wall
     warm = synth_docs_dir(1000)
     pagerank(spark, warm).count()
     bm25_scores(spark, warm).count()
