@@ -6,13 +6,19 @@ at 10^12-turn scale a job must resume mid-run. Design:
 - every turn gets a deterministic bucket ``pk = xxhash64(conv_id, turn_idx)
   mod num_buckets`` — content-derived, so a re-run assigns identical
   buckets regardless of cluster size or input split order;
+- pk is the run's only key: the input is repartitioned by pk before the
+  extraction UDF, so each bucket is extracted by one task and written as
+  one file (hashing turn_idx spreads a giant conversation over buckets);
 - output parquet is partitioned by pk with dynamic partition overwrite, so
   re-processing a bucket replaces (never duplicates) its output;
 - after output commit, one lineage row per pk is appended to the checkpoint
   table: (run_id, pk, conv_id_min/max, turn_count, bytes_decoded, checksum,
-  ts). checksum is content-derived (bit_xor of per-row xxhash64), so a
-  resume can verify prior buckets without recomputing them;
-- resume = LEFT ANTI JOIN of the input's pk against completed lineage pks.
+  ts). checksum is content-derived (sum of per-row xxhash64 mod 2^64:
+  order-independent, but a duplicated row changes it), so a resume can
+  verify prior buckets without recomputing them;
+- resume is decided on the driver: the pks in the lineage are subtracted
+  from the input's pks (each set at most num_buckets ints), and a run with
+  nothing left returns before any extraction is planned.
 
 On a real deployment both tables are Iceberg (``writeTo(...).append()`` /
 ``overwritePartitions()``); plain parquet here carries the same layout and
@@ -21,14 +27,25 @@ commit ordering.
 from __future__ import annotations
 
 import os
+from decimal import Decimal
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .pipeline import extract_transcripts
 
-LINEAGE_COLS = ["run_id", "pk", "conv_id_min", "conv_id_max", "turn_count",
-                "bytes_decoded", "checksum", "ts"]
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("pk", T.IntegerType()),
+    T.StructField("conv_id_min", T.StringType()),
+    T.StructField("conv_id_max", T.StringType()),
+    T.StructField("turn_count", T.LongType()),
+    T.StructField("bytes_decoded", T.LongType()),
+    T.StructField("checksum", T.StringType()),
+    T.StructField("ts", T.TimestampType()),
+])
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -37,19 +54,15 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    if not os.path.exists(lineage_path):
-        return None
-    try:
-        lineage = spark.read.parquet(lineage_path)
-    except Exception:
-        return None
-    return lineage.select("pk").distinct()
-
-
 def lineage_of(extracted_with_pk: DataFrame, run_id: str) -> DataFrame:
-    """One row per bucket; checksum is order-independent + content-derived."""
+    """One row per bucket; checksum is order-independent + content-derived.
+
+    The row hashes are summed as decimals (a long sum overflows, which ANSI
+    mode raises) and reduced mod 2^64, written as hex like an unsigned
+    long."""
     row_hash = F.xxhash64("conv_id", "turn_idx", "text", "status")
+    checksum = F.pmod(F.sum(row_hash.cast("decimal(20,0)")),
+                      F.lit(Decimal(2 ** 64)))
     return (
         extracted_with_pk
         .groupBy("pk")
@@ -58,47 +71,51 @@ def lineage_of(extracted_with_pk: DataFrame, run_id: str) -> DataFrame:
             F.max("conv_id").alias("conv_id_max"),
             F.count("*").alias("turn_count"),
             F.sum("bytes_decoded").alias("bytes_decoded"),
-            F.conv(F.bit_xor(row_hash).cast("string"), 10, 16).alias("checksum"),
+            F.conv(checksum.cast("string"), 10, 16).alias("checksum"),
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("ts", F.current_timestamp())
-        .select(*LINEAGE_COLS)
+        .select(*LINEAGE_SCHEMA.fieldNames())
     )
 
 
 def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
-                   run_id: str, num_buckets: int = 64,
-                   page_numbers=None, detect_vertical: bool = True,
-                   salt: int = 16,
+                   run_id: str, num_buckets: int = 64, page_numbers=None,
                    fail_after_buckets: int | None = None) -> dict:
     """Execute (or resume) a checkpointed extraction run.
 
     ``fail_after_buckets`` processes only the first N outstanding buckets —
     the test hook that simulates a mid-run crash.
-    Returns counters: {"processed_buckets": n, "skipped_buckets": m}.
+    Returns counters: {"processed_buckets": n, "skipped_buckets": m}, where
+    m counts the input's buckets already in the lineage.
     """
     output_path = os.path.join(out_dir, "extracted")
     lineage_path = os.path.join(out_dir, "lineage")
     src = with_bucket(transcripts, num_buckets)
-    done = completed_buckets(spark, lineage_path)
-    n_done = 0
-    if done is not None:
-        n_done = done.count()
-        src = src.join(F.broadcast(done), "pk", "left_anti")
-    # the outstanding bucket list is tiny (<= num_buckets ints) and known
-    # before extraction; collecting it lets the post-commit read-back
-    # partition-prune to just-written pk= directories instead of
-    # rescanning every previously committed bucket on resume
-    todo_pks = [r.pk for r in
-                src.select("pk").distinct().orderBy("pk").collect()]
-    if fail_after_buckets is not None:
-        todo_pks = todo_pks[:fail_after_buckets]
-        src = src.filter(F.col("pk").isin(todo_pks))
-    extracted = extract_transcripts(
-        src.drop("pk"), page_numbers=page_numbers,
-        detect_vertical=detect_vertical, salt=salt,
-    )
-    extracted = with_bucket(extracted, num_buckets)
+    input_pks = {r.pk for r in src.select("pk").distinct().collect()}
+    # asked of Spark, not os.path, so an hdfs:// or file:// output resumes
+    # too; the explicit schema reads a table holding only an uncommitted
+    # _temporary/ as empty, and a corrupt file fails the run instead of
+    # silently reprocessing every bucket
+    try:
+        lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":  # else: first run
+            raise
+        done = set()
+    else:
+        done = {r.pk for r in lineage.select("pk").distinct().collect()}
+    todo = sorted(input_pks - done)[:fail_after_buckets]
+    stats = {"processed_buckets": len(todo),
+             "skipped_buckets": len(input_pks & done)}
+    if not todo:
+        return stats
+    bucketed = (src.filter(F.col("pk").isin(todo))
+                .repartition("pk").drop("pk"))
+    extracted = with_bucket(
+        extract_transcripts(bucketed, page_numbers=page_numbers,
+                            repartition=False),
+        num_buckets)
     # commit order: output partitions first, lineage second — a crash in
     # between re-runs those buckets and dynamic overwrite keeps it idempotent
     (extracted.write
@@ -110,13 +127,9 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # reflects exactly what was committed; the isin on the partition
     # column prunes the scan to this run's pk= directories only
     this_run = (spark.read.parquet(output_path)
-                .filter(F.col("pk").isin(todo_pks)))
-    lineage = lineage_of(this_run, run_id)
-    lineage.write.mode("append").parquet(lineage_path)
-    n_processed = (spark.read.parquet(lineage_path)
-                   .filter(F.col("run_id") == run_id)
-                   .select("pk").distinct().count())
-    return {"processed_buckets": int(n_processed), "skipped_buckets": int(n_done)}
+                .filter(F.col("pk").isin(todo)))
+    lineage_of(this_run, run_id).write.mode("append").parquet(lineage_path)
+    return stats
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:

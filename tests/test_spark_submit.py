@@ -44,7 +44,7 @@ def test_spark_submit_pyfiles_job_runs_and_resumes(tmp_path):
            "--py-files", zip_path,
            os.path.join(REPO, "jobs", "extract_job.py"),
            "--input", str(inp), "--output", str(out),
-           "--run-id", "submit-test", "--buckets", "8", "--salt", "2"]
+           "--run-id", "submit-test", "--buckets", "8"]
     r1 = subprocess.run(cmd, cwd=str(tmp_path), env=env,
                         capture_output=True, text=True, timeout=420)
     assert r1.returncode == 0, r1.stderr[-3000:]
@@ -55,11 +55,11 @@ def test_spark_submit_pyfiles_job_runs_and_resumes(tmp_path):
     assert set(extracted["status"]) == {"ok"}
 
     # second submit of the identical command = pure resume: every bucket
-    # is anti-joined away as already committed (processed_buckets is the
-    # run-id's cumulative lineage count, so it stays at the bucket total)
+    # is already committed, so there is nothing to process
     r2 = subprocess.run(cmd, cwd=str(tmp_path), env=env,
                         capture_output=True, text=True, timeout=420)
     assert r2.returncode == 0, r2.stderr[-3000:]
+    assert "'processed_buckets': 0" in r2.stdout, r2.stdout[-2000:]
     assert "'skipped_buckets': 8" in r2.stdout, r2.stdout[-2000:]
     assert len(pd.read_parquet(out / "extracted")) == 40  # no dups
     lineage = pd.read_parquet(out / "lineage")
